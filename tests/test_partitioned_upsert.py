@@ -344,3 +344,96 @@ def test_upsert_kill_point_stress(spark, tmp_path, kind):
         ]
         if kind == "stale_tmp":
             assert not stale  # aged orphan swept
+
+
+def _leaf_files(target):
+    """{relative parquet path: bytes} for every data file in the table."""
+    out = {}
+    for p in glob.glob(os.path.join(target, "**", "*.parquet"), recursive=True):
+        with open(p, "rb") as f:
+            out[os.path.relpath(p, target)] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("partition_by", [["day"], ["day", "loc"]])
+def test_upsert_touching_many_partitions(spark, tmp_path, partition_by):
+    """A batch touching 400 partitions (one of them NULL) merges in one
+    pass: every staged key gets its new value, the NULL partition keeps
+    its other rows, and partitions outside the batch stay
+    byte-identical on disk."""
+    target = str(tmp_path / "many")
+    schema = "k string, v int, day string, loc string"
+    touched = [(f"d{i:03d}", f"l{i % 3}") for i in range(400)]
+    # one NULL field: the whole day at arity 1, only the loc at arity 2
+    touched[0] = (None, "l0") if partition_by == ["day"] else ("d000", None)
+    untouched = [("u1", "l0"), ("u2", "l1")]
+
+    def key(day, loc, suffix):
+        return f"{day}|{loc}|{suffix}"
+
+    seed = [
+        (key(day, loc, s), 0, day, loc)
+        for day, loc in touched + untouched
+        for s in ("a", "b")
+    ]
+    upsert_path(
+        spark, target, spark.createDataFrame(seed, schema),
+        keys=["k"], partition_by=partition_by,
+    )
+    untouched_dirs = [
+        os.path.join(*(f"{c}={v}" for c, v in zip(partition_by, part)))
+        for part in untouched
+    ]
+    before = {
+        rel: data
+        for rel, data in _leaf_files(target).items()
+        if rel.startswith(tuple(untouched_dirs))
+    }
+    assert len(before) >= len(untouched)
+
+    batch = [(key(day, loc, "a"), 1, day, loc) for day, loc in touched]
+    n0, n1 = upsert_path(
+        spark, target, spark.createDataFrame(batch, schema),
+        keys=["k"], partition_by=partition_by,
+    )
+    assert n0 == n1 == 400
+
+    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
+    assert got == {
+        **{k: 0 for k, _v, _d, _l in seed},
+        **{k: 1 for k, _v, _d, _l in batch},
+    }
+    null_day, null_loc = touched[0]
+    assert got[key(null_day, null_loc, "b")] == 0  # NULL partition kept
+    after = _leaf_files(target)
+    assert {rel: after.get(rel) for rel in before} == before
+
+
+def test_upsert_never_reads_untouched_partitions(spark, tmp_path):
+    """The target slice is pruned at the file index: a batch into one
+    partition succeeds even when another partition's data file is
+    unreadable, and that file is left as it is."""
+    target = str(tmp_path / "tcorrupt")
+    seed = _mk_updates(spark, [("a", 1, "d1"), ("b", 2, "d2"), ("c", 3, "d3")])
+    upsert_path(spark, target, seed, keys=["k"], partition_by=["day"])
+
+    # schema inference reads the first data file's footer, so corrupt
+    # the lexicographically last partition
+    garbage = b"not a parquet file"
+    corrupt = _files(target, "d3")
+    assert corrupt
+    for p in corrupt:
+        with open(p, "wb") as f:
+            f.write(garbage)
+
+    batch = _mk_updates(spark, [("a", 10, "d1"), ("a2", 11, "d1")])
+    n0, n1 = upsert_path(spark, target, batch, keys=["k"], partition_by=["day"])
+    assert n0 == n1 == 2
+    for p in corrupt:
+        with open(p, "rb") as f:
+            assert f.read() == garbage
+    got = {
+        r.k: r.v
+        for r in spark.read.parquet(target).filter(F.col("day") != "d3").collect()
+    }
+    assert got == {"a": 10, "a2": 11, "b": 2}

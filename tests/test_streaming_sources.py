@@ -273,8 +273,7 @@ def test_processing_time_resident_load(spark, tmp_path):
     wave1 = [{"location_id": "DEL", "name": "New Delhi", "region": "Delhi",
               "country": "India", "latitude": 28.6, "longitude": 77.2}]
     _write_csv(f"{stage}/w1.csv", wave1, COLS)
-    q = start_load(spark, load, stage, target, ckpt,
-                   available_now=False, processing_time="1 second")
+    q = start_load(spark, load, stage, target, ckpt, processing_time="1 second")
     try:
         deadline = time.time() + 60
         while time.time() < deadline and not load.audit_log:

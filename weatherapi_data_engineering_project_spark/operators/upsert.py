@@ -16,12 +16,12 @@ operators, since plain Spark has no MERGE without a lakehouse format:
   MERGE would raise on duplicate stage keys; we resolve deterministically
   instead — deviation documented).
 
-Scale notes: the anti-join shuffles both sides on pk — at 100 TB this is
-the dominant cost, so ``upsert_path`` persists targets *partitioned by a
-stable bucket of the pk* and we pre-repartition updates on the same key,
-letting AQE pick shuffled-hash and coalesce post-join. When ``updates``
-is small relative to ``target`` (the steady-state micro-batch case) the
-anti-join broadcasts the update keyset instead of shuffling the target.
+Scale notes: the anti-join's build side is the distinct update keyset.
+The planner broadcasts it when it is under
+``spark.sql.autoBroadcastJoinThreshold`` (the steady-state micro-batch
+case) and otherwise shuffles both sides on pk. With ``partition_by``,
+``upsert_path`` reads and rewrites only the partitions the batch
+touches, never the whole table.
 """
 
 from __future__ import annotations
@@ -63,19 +63,11 @@ def upsert(
     updates: DataFrame,
     keys: list[str],
     order_by: list[Column] | None = None,
-    broadcast_updates: bool | None = None,
 ) -> DataFrame:
-    """MERGE semantics as a DataFrame→DataFrame transform (M1).
-
-    ``broadcast_updates=True`` hints the planner to broadcast the update
-    side of the anti-join — right for steady-state micro-batches where
-    the stage is tiny vs. the target; ``None`` lets AQE decide from
-    runtime stats.
-    """
+    """MERGE semantics as a DataFrame→DataFrame transform (M1)."""
     updates = dedup_updates(updates, keys, order_by)
     updates = updates.select(*target.columns)  # positional parity with target
-    anti_side = F.broadcast(updates) if broadcast_updates else updates
-    kept = target.join(anti_side.select(*keys).distinct(), on=keys, how="left_anti")
+    kept = target.join(updates.select(*keys).distinct(), on=keys, how="left_anti")
     return kept.unionByName(updates)
 
 
@@ -109,9 +101,19 @@ def upsert_path(
     """Persisted upsert with the overwrite-own-input hazard handled.
 
     Spark cannot overwrite a parquet directory it is concurrently
-    reading, so: write the merged result to a temp sibling dir, then
-    atomically swap. Returns the (n0, n1) audit counts; callers gate
-    stage cleanup on n0 == n1 exactly as ``location.sql:71-79`` does.
+    reading, so: merge, write the result to a temp sibling dir, then
+    swap it in by renames. Returns the (n0, n1) audit counts; callers
+    gate stage cleanup on n0 == n1 exactly as ``location.sql:71-79`` does.
+
+    With ``partition_by`` on a target that already has those columns,
+    the merge is incremental: only the partitions the batch touches are
+    read (one ``struct(partition_by) IN (...)`` predicate, pruned at the
+    file index), rewritten, and swapped leaf dir by leaf dir — never the
+    whole table. INVARIANT: partition columns must be immutable
+    attributes of the key (e.g. the date embedded in the surrogate key)
+    — if a key could move partitions, its old copy would survive in the
+    old partition. That holds for every reference table (keys embed
+    location+date). Any other call merges and swaps the whole table.
 
     ``derived`` maps partition-column names to the SQL exprs that
     compute them from the table's own columns (the load-time
@@ -124,8 +126,10 @@ def upsert_path(
     the incremental path (ADVICE r03).
     """
     _recover_interrupted_swap(target_path)
-    exists = os.path.exists(target_path)
-    if exists:
+    incremental = False
+    if not os.path.exists(target_path):
+        merged = dedup_updates(updates, keys, order_by)
+    else:
         # heal crash-displaced partition dirs BEFORE any read, even on
         # the non-partitioned path: a whole-table merge that read past
         # an invisible .old partition dir would rewrite the table
@@ -136,30 +140,36 @@ def upsert_path(
         _recover_interrupted_partition_swaps(
             target_path, max_depth=len(partition_by) if partition_by else 6
         )
-    if exists and partition_by:
-        tgt_cols = spark.read.parquet(target_path).schema.names
-        missing = [c for c in partition_by if c not in tgt_cols]
-        if not missing:
-            return _upsert_partitions(
-                spark, target_path, updates, keys, order_by, partition_by
-            )
-        if derived is None or any(c not in derived for c in missing):
+        target = spark.read.parquet(target_path)
+        missing = [c for c in partition_by or [] if c not in target.columns]
+        if any(c not in (derived or {}) for c in missing):
             raise ValueError(
                 f"target {target_path} lacks partition column(s) "
                 f"{missing} and no derivation was supplied — pass "
                 "`derived` exprs for the one-time migration, or rewrite "
                 "the table manually"
             )
-        # fall through: one-time whole-table migration rewrite
-
-    if exists:
-        target = spark.read.parquet(target_path)
-        for c in partition_by or []:
-            if c not in target.columns:
-                target = target.withColumn(c, F.expr(derived[c]))
+        if partition_by and not missing:
+            incremental = True
+            affected = updates.select(*partition_by).distinct().collect()
+            if not affected:
+                return 0, 0
+            # one IN over partition-value structs: struct equality is
+            # null-safe, so a NULL partition value selects the null
+            # partition (under == it would select nothing, and the swap
+            # would replace that partition with only the batch's rows)
+            types = {f.name: f.dataType.simpleString() for f in target.schema}
+            target = target.filter(
+                F.struct(*partition_by).isin(
+                    *[
+                        F.struct(*[F.lit(row[c]).cast(types[c]) for c in partition_by])
+                        for row in affected
+                    ]
+                )
+            )
+        for c in missing:  # one-time legacy migration
+            target = target.withColumn(c, F.expr(derived[c]))
         merged = upsert(target, updates, keys, order_by)
-    else:
-        merged = dedup_updates(updates, keys, order_by)
 
     tmp = os.path.join(
         os.path.dirname(target_path) or tempfile.gettempdir(),
@@ -170,14 +180,42 @@ def upsert_path(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
 
-    result = spark.read.parquet(tmp)
-    n0, n1 = audit_counts(result, updates, keys)
+    n0, n1 = audit_counts(spark.read.parquet(tmp), updates, keys)
 
-    old = target_path + f".old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(target_path):
-        os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    _discard(old)
+    if not incremental:
+        old = target_path + f".old-{uuid.uuid4().hex[:8]}"
+        if os.path.exists(target_path):
+            os.rename(target_path, old)
+        os.rename(tmp, target_path)
+        _discard(old)
+        return n0, n1
+
+    # swap each affected partition dir (nested dirs for multi-col keys);
+    # collect leaf dirs first — renaming during os.walk corrupts the walk
+    leaf_dirs = [
+        root
+        for root, _dirs, files in os.walk(tmp)
+        if any(f.endswith(".parquet") for f in files)
+        and os.path.relpath(root, tmp) != "."
+    ]
+    for root in leaf_dirs:
+        rel = os.path.relpath(root, tmp)
+        dst = os.path.join(target_path, rel)
+        # the displaced dir gets a DOT-prefixed name: partition discovery
+        # ignores dot/underscore paths, so a failed cleanup (rmtree is
+        # best-effort) can never surface superseded rows as a bogus
+        # partition value; _recover_interrupted_partition_swaps restores
+        # it if the crash hits between the two renames
+        old = os.path.join(
+            os.path.dirname(dst),
+            f".old-{uuid.uuid4().hex[:8]}-{os.path.basename(dst)}",
+        )
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        if os.path.exists(dst):
+            os.rename(dst, old)
+        os.rename(root, dst)
+        _discard(old)
+    shutil.rmtree(tmp, ignore_errors=True)
     return n0, n1
 
 
@@ -250,86 +288,6 @@ def _recover_interrupted_swap(target_path: str) -> None:
             # task file creation bumps its parent dir's mtime
             if _time.time() - _newest_dir_mtime(p) > 3600:
                 shutil.rmtree(p, ignore_errors=True)
-
-
-def _upsert_partitions(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    order_by: list[Column] | None,
-    partition_by: list[str],
-) -> tuple[int, int]:
-    """Incremental partition rewrite: merge and swap ONLY the partitions
-    the batch touches.
-
-    This is what makes the upsert viable at 100 TB: a steady-state
-    micro-batch touches a handful of partitions (today's dates, a few
-    locations), so the anti-join reads and the writer rewrites that
-    sliver — never the whole table. Partition pruning serves the read
-    (`filter(part IN affected)` prunes at the file index), and the swap
-    renames just those partition directories.
-
-    INVARIANT: partition columns must be immutable attributes of the
-    key (e.g. the date embedded in the surrogate key) — if a key could
-    move partitions, its old copy would survive in the old partition.
-    That holds for every reference table (keys embed location+date).
-    (Crash recovery already ran in upsert_path — the only caller.)
-    """
-    affected = updates.select(*partition_by).distinct().collect()
-    if not affected:
-        return 0, 0
-    cond = None
-    for row in affected:
-        this = None
-        for c in partition_by:
-            # eqNullSafe, NOT ==: a NULL partition value under == makes
-            # the whole predicate NULL, the target slice comes back
-            # empty, and the swap would replace the null partition with
-            # only the batch's rows — silent deletion of its history.
-            clause = F.col(c).eqNullSafe(F.lit(row[c]))
-            this = clause if this is None else (this & clause)
-        cond = this if cond is None else (cond | this)
-
-    target_slice = spark.read.parquet(target_path).filter(cond)
-    merged = upsert(target_slice, updates, keys, order_by)
-
-    tmp = os.path.join(
-        os.path.dirname(target_path) or tempfile.gettempdir(),
-        f".{os.path.basename(target_path)}.tmp-{uuid.uuid4().hex[:8]}",
-    )
-    merged.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-
-    result = spark.read.parquet(tmp)
-    n0, n1 = audit_counts(result, updates, keys)
-
-    # swap each affected partition dir (nested dirs for multi-col keys);
-    # collect leaf dirs first — renaming during os.walk corrupts the walk
-    leaf_dirs = [
-        root
-        for root, _dirs, files in os.walk(tmp)
-        if any(f.endswith(".parquet") for f in files)
-        and os.path.relpath(root, tmp) != "."
-    ]
-    for root in leaf_dirs:
-        rel = os.path.relpath(root, tmp)
-        dst = os.path.join(target_path, rel)
-        # the displaced dir gets a DOT-prefixed name: partition discovery
-        # ignores dot/underscore paths, so a failed cleanup (rmtree is
-        # best-effort) can never surface superseded rows as a bogus
-        # partition value; _recover_interrupted_partition_swaps restores
-        # it if the crash hits between the two renames
-        old = os.path.join(
-            os.path.dirname(dst),
-            f".old-{uuid.uuid4().hex[:8]}-{os.path.basename(dst)}",
-        )
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(root, dst)
-        _discard(old)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n0, n1
 
 
 def _newest_dir_mtime(path: str) -> float:

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.weather_transform import CITY_CODES
+
 FETCH_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("city", T.StringType()),
@@ -40,10 +42,7 @@ FETCH_RESULT_SCHEMA = T.StructType(
     ]
 )
 
-DEFAULT_CITIES = [
-    "New Delhi", "Bangalore", "Chennai", "Pune", "Mumbai",
-    "Hyderabad", "Jaipur", "Kochi", "Kolkata", "Ahmedabad",
-]  # DataExtraction.py:48
+DEFAULT_CITIES = [name for name, _code in CITY_CODES]  # DataExtraction.py:48
 
 
 def http_fetcher(api_key: str, days: int = 3) -> Callable[[str], str | None]:
@@ -75,7 +74,6 @@ def extract(
     cities: list[str],
     run_date: str,
     fetch: Callable[[str], str | None],
-    fan_out: bool = True,
 ) -> DataFrame:
     """Fetch every city's document for ``run_date``; failed fetches are
     dropped (P8 null-guard filter). Returns (city, run_date, payload).
@@ -83,20 +81,16 @@ def extract(
     cities_df = spark.createDataFrame(
         [(c, run_date) for c in cities], "city string, run_date string"
     )
-    if fan_out:
 
-        def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["payload"] = pdf["city"].map(fetch)
-                yield pdf
+    def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["payload"] = pdf["city"].map(fetch)
+            yield pdf
 
-        fetched = cities_df.repartition(max(1, min(len(cities), 8))).mapInPandas(
-            fetch_partition, schema=FETCH_RESULT_SCHEMA
-        )
-    else:  # driver-side fallback, matching the reference's loop shape
-        rows = [(c, run_date, fetch(c)) for c in cities]
-        fetched = spark.createDataFrame(rows, FETCH_RESULT_SCHEMA)
+    fetched = cities_df.repartition(max(1, min(len(cities), 8))).mapInPandas(
+        fetch_partition, schema=FETCH_RESULT_SCHEMA
+    )
     return fetched.filter(F.col("payload").isNotNull())
 
 

@@ -29,11 +29,9 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from .rest import DEFAULT_CITIES, http_fetcher
+
 RAW_SCHEMA_DDL = "city string, run_date string, payload string"
-DEFAULT_CITIES = (
-    "New Delhi,Mumbai,Hyderabad,Kochi,Bangalore,Chennai,Kolkata,"
-    "Pune,Ahmedabad,Jaipur"
-)
 
 
 class _CityPartition(InputPartition):
@@ -46,7 +44,7 @@ class WeatherApiReader(DataSourceReader):
         self.options = options
         self.cities = [
             c.strip()
-            for c in options.get("cities", DEFAULT_CITIES).split(",")
+            for c in options.get("cities", ",".join(DEFAULT_CITIES)).split(",")
             if c.strip()
         ]
         self.mode = options.get("mode", "http")
@@ -71,18 +69,9 @@ class WeatherApiReader(DataSourceReader):
         api_key = self.options.get("api_key")
         if not api_key:
             raise ValueError("weatherapi: api_key option required in http mode")
-        try:
-            import requests
-
-            resp = requests.get(
-                "https://api.weatherapi.com/v1/forecast.json",
-                params={"key": api_key, "q": city, "days": self.days},
-                timeout=30,
-            )
-            resp.raise_for_status()
-            yield (city, self.run_date, resp.text)
-        except Exception:
-            return
+        payload = http_fetcher(api_key, self.days)(city)
+        if payload is not None:
+            yield (city, self.run_date, payload)
 
 
 class WeatherApiDataSource(DataSource):

@@ -16,11 +16,11 @@ truncate (``location.sql:36-83``). The Spark-native equivalent:
   n0/n1 counts are still surfaced per batch for observability
   (``location.sql:38-79``).
 
-Scale notes: file-source listing is incremental (maxFilesPerTrigger
-bounds batch size); the upsert's anti-join is the only shuffle, keyed
-on the table pk. At 100 TB the target is partitioned (e.g. by
-location_id bucket or date) so each micro-batch rewrites only the
-partitions it touches — ``partition_by`` is plumbed through.
+Scale notes: each drain picks up every stage file not yet in the
+source's file log; the upsert's anti-join is the only shuffle, keyed
+on the table pk. A table with ``partition_by`` (e.g. its date) is
+rewritten incrementally: each micro-batch reads and rewrites only the
+partitions it touches (see ``operators.upsert.upsert_path``).
 """
 
 from __future__ import annotations
@@ -66,28 +66,23 @@ def start_load(
     stage_dir: str,
     target_path: str,
     checkpoint_dir: str,
-    fmt: str = "csv",
-    available_now: bool = True,
     processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
     csv_mode: str = "PERMISSIVE",
     quarantine_dir: str | None = None,
-    shuffle_partitions: int | None = 8,
 ):
-    """Wire the stream: stage files → foreachBatch upsert into target.
+    """Wire the stream: stage CSV files → foreachBatch upsert into target.
 
-    Returns the StreamingQuery. ``available_now=True`` drains all
-    pending files then stops (the cron-task equivalent);
-    ``processing_time`` keeps a resident micro-batch loop.
+    Returns the StreamingQuery. With ``processing_time=None`` the query
+    drains all pending files then stops (``Trigger.AvailableNow``, the
+    cron-task equivalent); a ``processing_time`` such as ``"4 hours"``
+    keeps a resident micro-batch loop at that cadence.
 
-    ``shuffle_partitions`` (VERDICT r06 #5): the micro-batch upsert's
-    anti-join shuffle inherits ``spark.sql.shuffle.partitions``; a
-    vanilla session's 200 makes every batch pay 200-task exchanges for
-    kilobyte batches. The stream runs on a cloned-and-pinned session
-    (shared SparkContext, isolated SQLConf — session.cloned_session)
-    so the caller's conf is honored but never mutated. Pass ``None``
-    to run on the caller's session untouched (cluster deployments
-    sizing the width globally).
+    The micro-batch upsert's anti-join shuffle would inherit
+    ``spark.sql.shuffle.partitions``; a vanilla session's 200 makes
+    every batch pay 200-task exchanges for kilobyte batches. The stream
+    therefore runs on a session cloned with a fixed width of 8 (shared
+    SparkContext, isolated SQLConf — session.cloned_session), so the
+    caller's conf is honored but never mutated.
 
     M5 error wrapper: each micro-batch's upsert runs under try/except
     — a poison batch appends an ``Error: ...`` status (and, when
@@ -97,21 +92,18 @@ def start_load(
     (location.sql:36-83). Subsequent batches and other tables keep
     loading.
     """
-    if shuffle_partitions is not None:
-        spark = cloned_session(spark, shuffle_partitions)
-    reader = spark.readStream.schema(load.schema)
-    # curated zones nest per-run/per-day subdirs under the table prefix
-    # (mirroring the reference's S3 key layout); discover them all
-    reader = reader.option("recursiveFileLookup", True)
-    if fmt == "csv":
-        reader = (
-            reader.option("header", True)
-            .option("quote", '"')
-            .option("mode", csv_mode)
-        )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.format(fmt).load(stage_dir)
+    stream = (
+        cloned_session(spark, 8)
+        .readStream.schema(load.schema)
+        # curated zones nest per-run/per-day subdirs under the table
+        # prefix (mirroring the reference's S3 key layout); discover
+        # them all
+        .option("recursiveFileLookup", True)
+        .option("header", True)
+        .option("quote", '"')
+        .option("mode", csv_mode)
+        .csv(stage_dir)
+    )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         try:
@@ -157,9 +149,9 @@ def start_load(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
-    if available_now:
+    if processing_time is None:
         writer = writer.trigger(availableNow=True)
-    elif processing_time:
+    else:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
 
@@ -170,17 +162,13 @@ def run_available_now(
     stage_dir: str,
     target_path: str,
     checkpoint_dir: str,
-    fmt: str = "csv",
     timeout_s: int = 120,
     **kwargs,
 ) -> list[tuple[int, int, int]]:
     """One cron-equivalent drain: process all pending stage files, wait
     for completion, return the audit log entries appended this run."""
     before = len(load.audit_log)
-    q = start_load(
-        spark, load, stage_dir, target_path, checkpoint_dir, fmt=fmt,
-        available_now=True, **kwargs,
-    )
+    q = start_load(spark, load, stage_dir, target_path, checkpoint_dir, **kwargs)
     q.awaitTermination(timeout_s)
     if q.isActive:
         q.stop()
